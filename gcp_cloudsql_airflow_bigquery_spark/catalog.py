@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 TABLES = (
     "region",
@@ -30,9 +31,8 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table. Parquet scan → column pruning and predicate
-    pushdown are free once downstream ops are declarative.
+def _ts_guard(df: DataFrame) -> DataFrame:
+    """Normalize ``events.ts`` to a timestamp.
 
     ``events.ts`` may be written as either a plain parquet timestamp
     (current fixtures: TIMESTAMP(MICROS)) or as raw int64 nanoseconds
@@ -40,15 +40,38 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     under ``spark.sql.legacy.parquet.nanosAsLong``). We read plain and
     only convert when the column actually arrived as int64 — both
     encodings yield ``ts: timestamp`` with microsecond precision,
-    JVM-side, no Python data pass.
+    JVM-side, no Python data pass. Works on batch and streaming frames.
+    """
+    if dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one fixture table. Parquet scan → column pruning and predicate
+    pushdown are free once downstream ops are declarative.  ``events``
+    goes through :func:`_ts_guard`.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     df = spark.read.parquet(path)
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        from pyspark.sql import functions as F
+    return _ts_guard(df) if name == "events" else df
 
-        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    return df
+
+def events_feed(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The events table as a ``(batch, stream)`` pair, both ts-guarded.
+
+    One parquet schema read serves both sides: the stream is declared
+    with the batch frame's raw schema.  The fixture is a single parquet
+    FILE, and ``FileStreamSource`` derives basePath from its source path
+    and needs a directory, so the stream reads the char-class glob
+    ``[e]vents.parquet``: it matches exactly this file, and basePath
+    resolves to the non-glob parent ``sf_dir``.
+    """
+    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    stream = spark.readStream.schema(raw.schema).parquet(
+        os.path.join(sf_dir, "[e]vents.parquet")
+    )
+    return _ts_guard(raw), _ts_guard(stream)
 
 
 def register_tables(

@@ -10,20 +10,30 @@ Custom stateful operator (SURVEY.md §2 "custom operators" path (b)):
 :func:`running_user_totals` uses ``applyInPandasWithState`` — per-user
 running aggregates with explicit GroupState, the pattern for operators
 Spark's built-in windows can't express.
+
+Two things every registered ``events_*`` stream shares live in one place
+each.  The feed is :func:`catalog.events_feed` (next to
+``catalog.load_table``, sharing its ``ts`` encoding guard): one schema
+read gives the guarded batch frame and the guarded file stream.  The
+run is :func:`_await_completion`: every sink helper here starts an
+``availableNow`` query and hands it to that one wait, which stops the
+query and raises ``TimeoutError`` if it outlives ``timeout_s``.
 """
 
 from __future__ import annotations
 
 import math
 import os
+import tempfile
 from collections.abc import Iterator
 from contextlib import contextmanager
 from itertools import count
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
@@ -34,6 +44,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from ..catalog import events_feed
 
 EVENT_SCHEMA = StructType(
     [
@@ -62,10 +74,11 @@ _STATE_TARGET_DEFAULT = 128 * 1024 * 1024
 
 
 def _source_bytes(path: str) -> int:
-    """Bytes under ``path`` (file or directory), 0 if unreadable."""
+    """Bytes under ``path`` (file or directory); an unreadable entry
+    (broken symlink, file deleted during the walk) counts 0."""
     if os.path.isdir(path):
         return sum(
-            os.path.getsize(os.path.join(root, f))
+            _source_bytes(os.path.join(root, f))
             for root, _, files in os.walk(path)
             for f in files
         )
@@ -215,6 +228,15 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
+def _await_completion(q: StreamingQuery, timeout_s: float) -> None:
+    """Wait for a started ``availableNow`` query to finish; if it is
+    still active after ``timeout_s``, stop it and raise TimeoutError."""
+    q.awaitTermination(timeout_s)
+    if q.isActive:
+        q.stop()
+        raise TimeoutError(f"stream {q.name or q.id} did not finish in {timeout_s}s")
+
+
 def run_to_memory(
     stream: DataFrame,
     query_name: str,
@@ -230,10 +252,7 @@ def run_to_memory(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError(f"stream {query_name} did not finish in {timeout_s}s")
+    _await_completion(q, timeout_s)
 
 
 def run_to_files(
@@ -265,11 +284,7 @@ def run_to_files(
     )
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    q = writer.start()
-    q.awaitTermination(timeout_s)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError(f"file-sink stream did not finish in {timeout_s}s")
+    _await_completion(writer.start(), timeout_s)
 
 
 def attribution_join_stream(
@@ -356,10 +371,7 @@ def foreach_batch_merge(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError(f"stream {query_name} did not finish in {timeout_s}s")
+    _await_completion(q, timeout_s)
 
 
 DOC_SCHEMA = StructType(
@@ -424,12 +436,10 @@ def dedup_ingest_stream(
         docs_stream.writeStream.foreachBatch(_ingest)
         .queryName(query_name)
         .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", target_path + "__dedup_ingest_chk"
-        )
+        .option("checkpointLocation", target_path + "__dedup_ingest_chk")
         .start()
     )
-    q.awaitTermination(timeout_s)
+    _await_completion(q, timeout_s)
 
 
 CAPPED_SESSION_SCHEMA = StructType(
@@ -758,6 +768,33 @@ def misra_gries_stream(events: DataFrame, k: int = 8) -> DataFrame:
 _MEMSINK_SEQ = count()
 
 
+def _events_state(spark: SparkSession, sf_dir: str):
+    """:func:`scaled_state_partitions` sized from the events fixture."""
+    return scaled_state_partitions(spark, os.path.join(sf_dir, "events.parquet"))
+
+
+def _events_to_memory(
+    spark: SparkSession,
+    sf_dir: str,
+    stream: DataFrame,
+    prefix: str,
+    output_mode: str,
+) -> DataFrame:
+    """Run an events-feed stream to completion into a fresh memory table
+    ``{prefix}_{n}`` under :func:`_events_state`; return that table."""
+    name = f"{prefix}_{next(_MEMSINK_SEQ)}"
+    with _events_state(spark, sf_dir):
+        run_to_memory(stream, name, output_mode=output_mode)
+    return spark.table(name)
+
+
+def _scratch_dir(prefix: str) -> tempfile.TemporaryDirectory:
+    """Sink directory for one registered stream, removed when the block
+    exits: the result read from it is materialized first (eager
+    ``localCheckpoint`` of the small rollup)."""
+    return tempfile.TemporaryDirectory(prefix=prefix, ignore_cleanup_errors=True)
+
+
 def events_weekly_counts_streamed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -775,22 +812,7 @@ def events_weekly_counts_streamed(
     on (window, event_type); state is one row per open window×type.
     The decimal cast before SUM is the cross-engine FP-parity pattern
     from plans/relational.py."""
-    path = os.path.join(sf_dir, "events.parquet")
-    raw = spark.read.parquet(path)
-    # the fixture is a single parquet FILE; FileStreamSource derives
-    # basePath from the source path and requires a directory, so force
-    # glob handling with a char class that matches exactly this file
-    # (basePath then resolves to the non-glob parent, sf_dir)
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .parquet(os.path.join(sf_dir, "[e]vents.parquet"))
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        # same dtype guard as catalog.load_table (TIMESTAMP(NANOS)
-        # fixtures surface ts as int64 nanoseconds)
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
+    _, stream = events_feed(spark, sf_dir)
     agg = (
         stream.groupBy(F.window("ts", "7 days").alias("w"), "event_type")
         .agg(
@@ -806,10 +828,7 @@ def events_weekly_counts_streamed(
             "total_value",
         )
     )
-    name = f"events_weekly_streamed_{next(_MEMSINK_SEQ)}"
-    with scaled_state_partitions(spark, path):
-        run_to_memory(agg, name, output_mode="complete")
-    return spark.table(name)
+    return _events_to_memory(spark, sf_dir, agg, "events_weekly_streamed", "complete")
 
 
 def events_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -837,18 +856,7 @@ def events_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard partial-agg shuffle on event_type.  Swap the file source
     for Kafka at cluster scale; the dedup/rollup pipeline is unchanged.
     """
-    path = os.path.join(sf_dir, "events.parquet")
-    raw = spark.read.parquet(path)
-    # same single-file glob trick as events_weekly_counts_streamed:
-    # FileStreamSource needs a directory-resolvable basePath
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .parquet(os.path.join(sf_dir, "[e]vents.parquet"))
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
+    _, stream = events_feed(spark, sf_dir)
     cols = ["event_id", "user_id", "event_type", "value", "ts"]
     # fixture ts is TIMESTAMP_NTZ; watermarks require TIMESTAMP (UTC
     # session TZ makes the cast a no-op on the instant)
@@ -858,11 +866,8 @@ def events_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         at_least_once.withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(cols)
     )
-    name = f"events_dedup_streamed_{next(_MEMSINK_SEQ)}"
-    with scaled_state_partitions(spark, path):
-        run_to_memory(deduped, name, output_mode="append")
     return (
-        spark.table(name)
+        _events_to_memory(spark, sf_dir, deduped, "events_dedup_streamed", "append")
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -888,22 +893,12 @@ def events_attribution_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     FILTERED event types (clicks/purchases), not the full stream; the
     interval bound is what lets Spark expire buffered rows.  Swap the
     file source for Kafka; the join is unchanged."""
-    path = os.path.join(sf_dir, "events.parquet")
-    raw = spark.read.parquet(path)
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .parquet(os.path.join(sf_dir, "[e]vents.parquet"))
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
+    _, stream = events_feed(spark, sf_dir)
     stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     joined = attribution_join_stream(stream, within="30 minutes")
-    name = f"events_attribution_streamed_{next(_MEMSINK_SEQ)}"
-    with scaled_state_partitions(spark, path):
-        run_to_memory(joined, name, output_mode="append")
-    return spark.table(name)
+    return _events_to_memory(
+        spark, sf_dir, joined, "events_attribution_streamed", "append"
+    )
 
 
 def events_filesink_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -927,18 +922,7 @@ def events_filesink_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     append (the snapshot/pruning layout `pipeline.py` reads back),
     bounded 5-group rollup; swap source for Kafka and path for object
     storage unchanged."""
-    import tempfile
-
-    path = os.path.join(sf_dir, "events.parquet")
-    raw = spark.read.parquet(path)
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .parquet(os.path.join(sf_dir, "[e]vents.parquet"))
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
+    _, stream = events_feed(spark, sf_dir)
     landed = (
         stream.filter(F.col("value") >= 10.0)
         .select(
@@ -949,26 +933,27 @@ def events_filesink_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.to_date("ts").alias("day"),
         )
     )
-    base = tempfile.mkdtemp(prefix="events_filesink_")
-    out_dir = os.path.join(base, "landed")
-    with scaled_state_partitions(spark, path):
-        run_to_files(
-            landed,
-            out_dir,
-            os.path.join(base, "ckpt"),
-            partition_by=["day"],
+    with _scratch_dir("events_filesink_") as base:
+        out_dir = os.path.join(base, "landed")
+        with _events_state(spark, sf_dir):
+            run_to_files(
+                landed,
+                out_dir,
+                os.path.join(base, "ckpt"),
+                partition_by=["day"],
+            )
+        return (
+            spark.read.parquet(out_dir)
+            .groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.count_distinct("day").alias("n_days"),
+                F.round(
+                    F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4
+                ).alias("total_value"),
+            )
+            .localCheckpoint(eager=True)
         )
-    return (
-        spark.read.parquet(out_dir)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.count_distinct("day").alias("n_days"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4
-            ).alias("total_value"),
-        )
-    )
 
 
 def events_sessions_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -989,25 +974,15 @@ def events_sessions_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions only.  Same gap/cap as the batch twin
     (``events_session_capped``: 12 h gap, 48 h cap — both rules fire
     on the fixture)."""
-    path = os.path.join(sf_dir, "events.parquet")
-    raw = spark.read.parquet(path)
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .parquet(os.path.join(sf_dir, "[e]vents.parquet"))
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
+    _, stream = events_feed(spark, sf_dir)
     ev = stream.select(
         "user_id",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
     )
     sessions = capped_sessions_stream(ev, gap_s=43_200, max_duration_s=172_800)
-    name = f"events_sessions_streamed_{next(_MEMSINK_SEQ)}"
-    with scaled_state_partitions(spark, path):
-        run_to_memory(sessions, name, output_mode="append")
-    return spark.table(name)
+    return _events_to_memory(
+        spark, sf_dir, sessions, "events_sessions_streamed", "append"
+    )
 
 
 def foreach_batch_merge_lww(
@@ -1035,8 +1010,6 @@ def foreach_batch_merge_lww(
     the snapshot), one key-join against the snapshot, one
     ``merge_parquet`` (anti-join + union + rename swap — single data
     write of the merged table)."""
-    from pyspark.sql import Window
-
     from ..pipeline import merge_parquet
 
     keys = list(merge_keys)
@@ -1075,10 +1048,7 @@ def foreach_batch_merge_lww(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError(f"stream {query_name} did not finish in {timeout_s}s")
+    _await_completion(q, timeout_s)
 
 
 def events_upsert_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1098,15 +1068,9 @@ def events_upsert_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     The event-time LWW condition makes the snapshot micro-batch-slicing
     independent, so the oracle is the plain batch argmax over
     (seed window ∪ Jan-16 feed)."""
-    import tempfile
-
-    path = os.path.join(sf_dir, "events.parquet")
-    raw0 = spark.read.parquet(path)
-    raw = raw0
-    if dict(raw.dtypes).get("ts") == "bigint":
-        raw = raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    cut_lo = "2024-01-16"
-    cut_hi = "2024-01-17"
+    batch, stream = events_feed(spark, sf_dir)
+    cut_lo = F.lit("2024-01-16").cast("timestamp")
+    cut_hi = F.lit("2024-01-17").cast("timestamp")
     snap_cols = [
         F.col("user_id"),
         F.col("event_type"),
@@ -1114,49 +1078,42 @@ def events_upsert_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
         F.col("event_id"),
     ]
-    from pyspark.sql import Window
-
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts_us").desc(), F.col("event_id").desc()
     )
     seed = (
-        raw.filter(F.col("ts") < F.lit(cut_lo).cast("timestamp"))
+        batch.filter(F.col("ts") < cut_lo)
         .select(*snap_cols)
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-    base = tempfile.mkdtemp(prefix="events_upsert_")
-    target = os.path.join(base, "snapshot")
-    seed.write.mode("overwrite").parquet(target)
-
-    stream = spark.readStream.schema(raw0.schema).parquet(
-        os.path.join(sf_dir, "[e]vents.parquet")
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
     feed = stream.filter(
-        (F.col("ts") >= F.lit(cut_lo).cast("timestamp"))
-        & (F.col("ts") < F.lit(cut_hi).cast("timestamp"))
+        (F.col("ts") >= cut_lo) & (F.col("ts") < cut_hi)
     ).select(*snap_cols)
-    with scaled_state_partitions(spark, path):
-        foreach_batch_merge_lww(
-            feed,
-            target,
-            ["user_id"],
-            ["ts_us", "event_id"],
-            checkpoint=os.path.join(base, "ckpt"),
-            query_name="events_upsert_streamed",
+    with _scratch_dir("events_upsert_") as base:
+        target = os.path.join(base, "snapshot")
+        seed.write.mode("overwrite").parquet(target)
+        with _events_state(spark, sf_dir):
+            foreach_batch_merge_lww(
+                feed,
+                target,
+                ["user_id"],
+                ["ts_us", "event_id"],
+                checkpoint=os.path.join(base, "ckpt"),
+                query_name="events_upsert_streamed",
+            )
+        return (
+            spark.read.parquet(target)
+            .select(
+                "user_id",
+                F.col("event_type").alias("last_event_type"),
+                F.col("value").alias("last_value"),
+                F.col("ts_us").alias("last_ts_us"),
+                F.col("event_id").alias("last_event_id"),
+            )
+            .localCheckpoint(eager=True)
         )
-    return spark.read.parquet(target).select(
-        "user_id",
-        F.col("event_type").alias("last_event_type"),
-        F.col("value").alias("last_value"),
-        F.col("ts_us").alias("last_ts_us"),
-        F.col("event_id").alias("last_event_id"),
-    )
 
 
 def events_enriched_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1182,11 +1139,7 @@ def events_enriched_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale feed it from the warehouse and let AQE strategy-pick, or key
     both sides for a shuffle join — the stream pipeline is unchanged);
     the agg state is one row per cohort-week×type."""
-    path = os.path.join(sf_dir, "events.parquet")
-    raw = spark.read.parquet(path)
-    batch = raw
-    if dict(batch.dtypes).get("ts") == "bigint":
-        batch = batch.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    batch, stream = events_feed(spark, sf_dir)
     week_us = 7 * 24 * 3600 * 1_000_000
     dim = (
         batch.filter(F.col("ts").isNotNull())
@@ -1199,14 +1152,6 @@ def events_enriched_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cohort_wk"),
         )
     )
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .parquet(os.path.join(sf_dir, "[e]vents.parquet"))
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
     agg = (
         enriched_stream(stream, dim, on="user_id")
         .groupBy("cohort_wk", "event_type")
@@ -1217,10 +1162,9 @@ def events_enriched_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("total_value"),
         )
     )
-    name = f"events_enriched_streamed_{next(_MEMSINK_SEQ)}"
-    with scaled_state_partitions(spark, path):
-        run_to_memory(agg, name, output_mode="complete")
-    return spark.table(name)
+    return _events_to_memory(
+        spark, sf_dir, agg, "events_enriched_streamed", "complete"
+    )
 
 
 def events_heavy_hitters_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1240,16 +1184,7 @@ def events_heavy_hitters_streamed(spark: SparkSession, sf_dir: str) -> DataFrame
     stateful operator, no shuffle beyond the groupBy key.
     ``availableNow`` over the static fixture is a single micro-batch,
     so the one emitted snapshot per key is the final summary."""
-    path = os.path.join(sf_dir, "events.parquet")
-    raw = spark.read.parquet(path)
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .parquet(os.path.join(sf_dir, "[e]vents.parquet"))
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
+    _, stream = events_feed(spark, sf_dir)
     feed = stream.select(
         "event_type",
         F.unix_micros(F.date_trunc("millisecond", F.col("ts"))).alias(
@@ -1257,13 +1192,14 @@ def events_heavy_hitters_streamed(spark: SparkSession, sf_dir: str) -> DataFrame
         ),
         (F.col("user_id") % 8).alias("item"),
     )
-    name = f"events_heavy_hitters_streamed_{next(_MEMSINK_SEQ)}"
-    with scaled_state_partitions(spark, path):
-        run_to_memory(
-            misra_gries_stream(feed, k=8), name, output_mode="update"
-        )
     return (
-        spark.table(name)
+        _events_to_memory(
+            spark,
+            sf_dir,
+            misra_gries_stream(feed, k=8),
+            "events_heavy_hitters_streamed",
+            "update",
+        )
         .select(
             "event_type",
             F.col("item").cast("bigint").alias("item"),
@@ -1288,27 +1224,17 @@ def events_distinct_users_streamed(spark: SparkSession, sf_dir: str) -> DataFram
 
     Scale shape: standard partial-agg shuffle on (window, user);
     swap the file source for Kafka at cluster scale unchanged."""
-    path = os.path.join(sf_dir, "events.parquet")
-    raw = spark.read.parquet(path)
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .parquet(os.path.join(sf_dir, "[e]vents.parquet"))
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
+    _, stream = events_feed(spark, sf_dir)
     agg = (
         stream.filter(F.col("ts").isNotNull())
         .groupBy(F.window("ts", "7 days").alias("w"), "user_id")
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("wk_start"), "user_id", "n")
     )
-    name = f"events_distinct_users_streamed_{next(_MEMSINK_SEQ)}"
-    with scaled_state_partitions(spark, path):
-        run_to_memory(agg, name, output_mode="complete")
     return (
-        spark.table(name)
+        _events_to_memory(
+            spark, sf_dir, agg, "events_distinct_users_streamed", "complete"
+        )
         .groupBy("wk_start")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_users"),
@@ -1334,21 +1260,9 @@ def events_quarantine_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the split is one narrow codegen pass per micro-batch
     (no shuffle); the summary is a bucket-grain rollup of the
     re-read sinks."""
-    import shutil
-    import tempfile
-
     from ..operators import validate as V
 
-    path = os.path.join(sf_dir, "events.parquet")
-    raw = spark.read.parquet(path)
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .parquet(os.path.join(sf_dir, "[e]vents.parquet"))
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
+    _, stream = events_feed(spark, sf_dir)
     checks = [
         V.not_null("ts"),
         # the ingest contract caps value at 250 — the fixture's upper
@@ -1359,33 +1273,28 @@ def events_quarantine_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["click", "view", "purchase", "signup", "error"],
         ),
     ]
-    base = tempfile.mkdtemp(prefix="events_quarantine_")
-    clean_path = os.path.join(base, "clean")
-    dlq_path = os.path.join(base, "dlq")
-    with scaled_state_partitions(spark, path):
-        q = quarantined_ingest(
-            stream,
-            checks,
-            clean_path,
-            dlq_path,
-            os.path.join(base, "ckpt"),
+    with _scratch_dir("events_quarantine_") as base:
+        clean_path = os.path.join(base, "clean")
+        dlq_path = os.path.join(base, "dlq")
+        with _events_state(spark, sf_dir):
+            q = quarantined_ingest(
+                stream,
+                checks,
+                clean_path,
+                dlq_path,
+                os.path.join(base, "ckpt"),
+            )
+            _await_completion(q, 120.0)
+        clean = spark.read.parquet(clean_path).select(
+            F.lit("clean").alias("bucket")
         )
-        q.awaitTermination(120)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError("quarantine stream did not finish")
-    clean = spark.read.parquet(clean_path).select(
-        F.lit("clean").alias("bucket")
-    )
-    dlq = spark.read.parquet(dlq_path).select(
-        F.col("failed_checks").alias("bucket")
-    )
-    out = (
-        clean.unionByName(dlq)
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_rows"))
-        .orderBy("bucket")
-    )
-    out = out.localCheckpoint(eager=True)  # sinks are temp dirs
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+        dlq = spark.read.parquet(dlq_path).select(
+            F.col("failed_checks").alias("bucket")
+        )
+        return (
+            clean.unionByName(dlq)
+            .groupBy("bucket")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_rows"))
+            .orderBy("bucket")
+            .localCheckpoint(eager=True)
+        )

@@ -20,23 +20,12 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from gcp_cloudsql_airflow_bigquery_spark.plans.events import QUERIES  # noqa: E402
 from gcp_cloudsql_airflow_bigquery_spark.session import get_spark  # noqa: E402
-from gcp_cloudsql_airflow_bigquery_spark.streaming.streams import (  # noqa: E402
-    _STATE_TARGET_CONF,
-)
+from gcp_cloudsql_airflow_bigquery_spark.streaming import streams  # noqa: E402
 
-STREAMS = [
-    "events_weekly_counts_streamed",
-    "events_dedup_streamed",
-    "events_attribution_streamed",
-    "events_filesink_pipeline",
-    "events_sessions_streamed",
-    "events_upsert_streamed",
-    "events_enriched_streamed",
-    "events_heavy_hitters_streamed",
-    "events_distinct_users_streamed",
-    "events_quarantine_streamed",
-]
+# every registered query implemented in the streaming module
+STREAMS = [n for n, fn in QUERIES.items() if fn.__module__ == streams.__name__]
 
 
 def main() -> None:
@@ -58,14 +47,14 @@ def main() -> None:
         ).save()
         for _ in range(runs):
             for arm, tgt in arms.items():
-                spark.conf.set(_STATE_TARGET_CONF, tgt)
+                spark.conf.set(streams._STATE_TARGET_CONF, tgt)
                 t0 = time.perf_counter()
                 fn(spark, sf_dir).write.format("noop").mode(
                     "overwrite"
                 ).save()
                 dt = time.perf_counter() - t0
                 out[n][arm] = min(out[n].get(arm, float("inf")), dt)
-        spark.conf.unset(_STATE_TARGET_CONF)
+        spark.conf.unset(streams._STATE_TARGET_CONF)
         print(
             f"# {n}: before={out[n]['before_32_stores']:.2f} "
             f"after={out[n]['after_sized']:.2f}",
